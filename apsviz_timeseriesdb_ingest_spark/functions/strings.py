@@ -1,4 +1,4 @@
-"""String helpers (SURVEY.md section 2.7 F6/F9, section 2.5 X6)."""
+"""String helpers (SURVEY.md section 2.5 X6)."""
 
 from __future__ import annotations
 
@@ -11,10 +11,3 @@ def sanitize_pivot_label(label: str) -> str:
     any number of dots.
     """
     return label.replace(".", "")
-
-
-def csv_url(base: str, **params: str) -> str:
-    """Build the csvurl the reference attaches to apsviz stations
-    (``run/createIngestApsVizStationData.py:317-319``)."""
-    query = "&".join(f"{k}={v}" for k, v in params.items())
-    return f"{base}?{query}" if query else base

@@ -1,9 +1,8 @@
-"""Time parsing / formatting helpers (SURVEY.md section 2.7 F1-F5).
+"""Time parsing helpers (SURVEY.md section 2.7 F1).
 
 The reference extracts a "timemark" from harvest file names with the regex
 ``(\\d+-\\d+-\\d+T\\d+:\\d+:\\d+)`` (``run/createHarvestObsFileMeta.py:150``,
-``run/createIngestObsData.py:182``) and normalizes timestamps to
-``YYYY-MM-DDTHH:MM:SSZ`` strings (``run/runObsIngest.py:219-221``).
+``run/createIngestObsData.py:182``).
 """
 
 from __future__ import annotations
@@ -28,9 +27,3 @@ def timemark_from_filename(path_col: Column | str) -> Column:
     c = F.col(path_col) if isinstance(path_col, str) else path_col
     raw = F.translate(F.regexp_extract(c, TIMEMARK_RE, 1), "_", ":")
     return F.try_to_timestamp(raw, F.lit("yyyy-MM-dd'T'HH:mm:ss"))
-
-
-def timemark_iso_z(ts_col: Column | str) -> Column:
-    """Format a timestamp as the reference's ``...T...Z`` string (F2)."""
-    c = F.col(ts_col) if isinstance(ts_col, str) else ts_col
-    return F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss'Z'")

@@ -1,4 +1,4 @@
-"""Run-property lookup — ``getDashboardMeta`` equivalents (SURVEY S9/J8/X5).
+"""Run-property lookup — ``getDashboardMeta`` equivalents (SURVEY S9/X5).
 
 The reference queries a second Postgres DB (``asgs_dashboard.config_item``)
 through ``get_adcirc_run_property_variables``
@@ -36,15 +36,3 @@ def get_adcirc_run_property_variables(config_items: DataFrame, model_run_id: str
     row = rows[0].asDict()
     row.pop("instance_id", None)
     return row
-
-
-def check_model_source_meta(source_model_meta: DataFrame, filename_prefix: str,
-                            source_instance: str) -> bool:
-    """J8 existence check (``run/getDashboardMeta.py:100-138``): does this
-    (filename_prefix, source_instance) source already exist?"""
-    return bool(
-        source_model_meta.filter(
-            (F.col("filename_prefix") == filename_prefix)
-            & (F.col("source_instance") == source_instance)
-        ).limit(1).count()
-    )

@@ -20,7 +20,10 @@ Semantics mirrored from the reference SQL exactly:
 
 Plan shape: dims broadcast into the fact scan; the single shuffle is the
 pivot groupBy on time; explicit category lists keep the output schema
-constant-folded (no distinct pre-scan).
+constant-folded (no distinct pre-scan). Fact scans skip by ``time_bucket``
+partition alone (:func:`_time_range`), never through a zone-map sidecar:
+merged files span their whole ``time_bucket``, so a sidecar on a merged
+table cannot prune below the partition.
 """
 
 from __future__ import annotations
@@ -52,54 +55,12 @@ ALLPARMS_POST = dict(OBS_CATEGORIES) | {
 }
 
 
-def _parse_ntz(s: str):
-    """Tolerant driver-side parse of a query-bound timestamp string for
-    ZONE-MAP comparisons only (the real predicate stays the Spark
-    ``cast('timestamp_ntz')`` the pivots always apply). None on any
-    form this can't parse — skipping then degrades to the plain read,
-    never to a wrong prune."""
-    import datetime as dt
-
-    try:
-        return dt.datetime.fromisoformat(str(s).strip())
-    except ValueError:
-        return None
-
-
-def _fact_read(catalog: Catalog, table: str, schema,
-               time_range: tuple[str, str] | None) -> DataFrame:
-    """Fact-table scan with zone-map FILE skipping when the table has a
-    ``{table}__zm`` sidecar (``sources/skipping.build_skipping(...,
-    range_cols=["time"])`` — the ingest verbs keep it current): the
-    query's [start, end] prunes the driver-side file list BEFORE any
-    task is scheduled, composing with (and subsuming) the time_bucket
-    partition pruning for intra-month file skipping. Results are
-    identical with or without the sidecar — the callers' real
-    predicates are always applied (r6 verdict task 7: the skipping
-    layer now serves the headline read API, not just its own tests)."""
-    from ..sources.skipping import zm_table
-    from ..sources.zonemap import prune_files, read_pruned
-
-    if time_range is None or not catalog.exists(zm_table(table)) \
-            or not catalog.exists(table):
-        return catalog.read(table, schema)
-    lo, hi = (_parse_ntz(b) for b in time_range)
-    if lo is None or hi is None:
-        return catalog.read(table, schema)
-    keep = prune_files(catalog.read(zm_table(table)), "time", lo, hi,
-                       path=catalog.path(table))
-    return read_pruned(catalog.spark, catalog.path(table), keep)
-
-
-def obs_view(catalog: Catalog, *,
-             time_range: tuple[str, str] | None = None) -> DataFrame:
+def obs_view(catalog: Catalog) -> DataFrame:
     """drf_gauge_station_source_data (``run/ingestObsTasks.py:494-521``):
-    gauge_data ⋈ gauge_source ⋈ gauge_station, dims broadcast.
-    ``time_range=(start, end)`` lets the fact scan file-skip through
-    the zone-map sidecar when one exists (see :func:`_fact_read`)."""
+    gauge_data ⋈ gauge_source ⋈ gauge_station, dims broadcast."""
     from ..schemas import GAUGE_DATA, GAUGE_SOURCE, GAUGE_STATION
 
-    data = _fact_read(catalog, "gauge_data", GAUGE_DATA, time_range)
+    data = catalog.read("gauge_data", GAUGE_DATA)
     source = catalog.read("gauge_source", GAUGE_SOURCE)
     station = catalog.read("gauge_station", GAUGE_STATION)
     return (
@@ -108,12 +69,11 @@ def obs_view(catalog: Catalog, *,
     )
 
 
-def model_view(catalog: Catalog, *,
-               time_range: tuple[str, str] | None = None) -> DataFrame:
+def model_view(catalog: Catalog) -> DataFrame:
     """drf_model_station_source_data (``run/ingestModelTasks.py:475-501``)."""
     from ..schemas import GAUGE_STATION, MODEL_DATA, MODEL_SOURCE
 
-    data = _fact_read(catalog, "model_data", MODEL_DATA, time_range)
+    data = catalog.read("model_data", MODEL_DATA)
     source = catalog.read("model_source", MODEL_SOURCE)
     station = catalog.read("gauge_station", GAUGE_STATION)
     return (
@@ -175,8 +135,7 @@ def _pivot_timeseries(joined: DataFrame, value: F.Column,
 def get_obs_timeseries_station_data(catalog: Catalog, station_name: str,
                                     start_date: str, end_date: str) -> DataFrame:
     """X1 — obs crosstab for one station and date range."""
-    joined = _time_range(obs_view(catalog, time_range=(start_date, end_date)),
-                         start_date, end_date).filter(
+    joined = _time_range(obs_view(catalog), start_date, end_date).filter(
         F.col("station_name") == station_name)
     return _pivot_timeseries(joined, F.coalesce("water_level", "wave_height"),
                              OBS_CATEGORIES)
@@ -189,8 +148,7 @@ def get_obs_timeseries_station_data_allparms(catalog: Catalog, station_name: str
     cats = dict(ALLPARMS_PRE)
     cats[nowcast_source] = sanitize_pivot_label(nowcast_source)
     cats.update(ALLPARMS_POST)
-    joined = _time_range(obs_view(catalog, time_range=(start_date, end_date)),
-                         start_date, end_date).filter(
+    joined = _time_range(obs_view(catalog), start_date, end_date).filter(
         F.col("station_name") == station_name)
     value = F.coalesce("water_level", "stream_elevation", "wave_height",
                        "wind_speed", "air_pressure", "flow_volume")
@@ -202,10 +160,8 @@ def get_forecast_timeseries_station_data(catalog: Catalog, station_name: str,
                                          data_source: str, source_instance: str,
                                          ) -> DataFrame:
     """X3 — one forecast run's crosstab, pinned by timemark."""
-    joined = _time_range(model_view(catalog,
-                                    time_range=(timemark,
-                                                max_forecast_endtime)),
-                         timemark, max_forecast_endtime).filter(
+    joined = _time_range(model_view(catalog), timemark,
+                         max_forecast_endtime).filter(
         (F.col("station_name") == station_name)
         & (F.col("timemark") == F.lit(timemark).cast("timestamp_ntz"))
         & (F.col("data_source") == data_source)
@@ -220,9 +176,7 @@ def get_nowcast_timeseries_station_data(catalog: Catalog, station_name: str,
                                         data_source: str, source_instance: str,
                                         ) -> DataFrame:
     """X4 — nowcast crosstab over [start, end]."""
-    joined = _time_range(model_view(catalog,
-                                    time_range=(start_date, end_date)),
-                         start_date, end_date).filter(
+    joined = _time_range(model_view(catalog), start_date, end_date).filter(
         (F.col("station_name") == station_name)
         & (F.col("data_source") == data_source)
         & (F.col("source_instance") == source_instance)
@@ -245,18 +199,11 @@ def get_model_vs_obs_asof(catalog: Catalog, station_name: str,
     that stopped reporting should not be carried forward for days)."""
     from ..operators.asof import asof_join
 
-    # both fact scans go THROUGH the zone-map skipping layer with the
-    # query's own bounds (r7 verdict task 7 — this read used to be the
-    # one API path reading facts unpruned)
-    model = (_time_range(model_view(catalog,
-                                    time_range=(start_date, end_date)),
-                         start_date, end_date)
+    model = (_time_range(model_view(catalog), start_date, end_date)
              .filter(F.col("station_name") == station_name)
              .select("station_name", "data_source", "time",
                      F.col("water_level").alias("model_water_level")))
-    obs = (_time_range(obs_view(catalog,
-                                time_range=(start_date, end_date)),
-                       start_date, end_date)
+    obs = (_time_range(obs_view(catalog), start_date, end_date)
            .filter(F.col("station_name") == station_name)
            .select("station_name", "time", "water_level"))
     return asof_join(model, obs, on=["station_name"], left_ts="time",

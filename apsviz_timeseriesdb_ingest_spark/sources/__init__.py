@@ -1,9 +1,4 @@
-from .catalog import (  # noqa: F401
-    Catalog,
-    DeltaMerge,
-    DynamicOverwriteMerge,
-    MergeStrategy,
-)
+from .catalog import Catalog  # noqa: F401
 from .harvest_csv import read_harvest_csv, read_station_csv  # noqa: F401
 from .jsonl import read_documents_jsonl, write_jsonl_sharded  # noqa: F401
 from .skipping import (  # noqa: F401

@@ -16,9 +16,12 @@ Scale design: fact tables are partitioned by a derived time bucket
 rewrites the partitions the incoming batch touches (dynamic partition
 overwrite) — the cost is proportional to the batch's time window, never
 the table, which is the reference's bounded-DELETE optimization
-(``run/ingestObsTasks.py:390-399``) expressed as partition pruning. On a
-real deployment this maps 1:1 onto Delta/Iceberg MERGE; plain parquet
-keeps this repo dependency-free.
+(``run/ingestObsTasks.py:390-399``) expressed as partition pruning.
+
+Every verb but the merge keeps skipping sidecars current
+(``refresh_skipping``). The merge does not: merged files span their whole
+``time_bucket``, so a sidecar on a merged table cannot prune below the
+partition.
 """
 
 from __future__ import annotations
@@ -46,128 +49,10 @@ def time_bucket(col: str = "time") -> Column:
     return F.date_format(col, "yyyy-MM").alias(TIME_BUCKET)
 
 
-class MergeStrategy:
-    """Deployment seam for the keep-latest upsert (M3/J7).
-
-    The engine's merge semantics are: dedup ``incoming`` per ``keys`` by
-    ``order_by`` (first row wins), then upsert into ``table`` such that
-    for every key the winner across stored+incoming survives. How that
-    executes is a deployment concern — plain parquet needs a partition
-    overwrite; Delta/Iceberg deployments use a real transactional MERGE
-    with concurrent-writer safety. Swap the strategy at Catalog
-    construction; pipeline code never changes."""
-
-    def merge(self, catalog: "Catalog", table: str, incoming: DataFrame,
-              keys: Sequence[str], order_by: Sequence[Column | str], *,
-              time_col: str, drop_before_write: Sequence[str]) -> None:
-        raise NotImplementedError
-
-
-class DynamicOverwriteMerge(MergeStrategy):
-    """Single-writer merge for plain parquet: keep-latest dedup union'd
-    with only the time-bucket partitions the batch touches, rewritten via
-    dynamic partition overwrite. Cost is proportional to the batch's time
-    window, never the table (the reference's bounded DELETE,
-    ``run/ingestObsTasks.py:390-399``, as partition pruning)."""
-
-    def merge(self, catalog: "Catalog", table: str, incoming: DataFrame,
-              keys: Sequence[str], order_by: Sequence[Column], *,
-              time_col: str, drop_before_write: Sequence[str]) -> None:
-        incoming = incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
-        if incoming.isEmpty():
-            # degenerate batches (e.g. a header-only harvest file) must
-            # not create/overwrite anything: writing an empty frame to a
-            # fresh table path leaves a parquet dir with no footers that
-            # poisons every later read
-            return
-        if not catalog.exists(table):
-            deduped = (keep_latest(incoming, keys, order_by).drop(*drop_before_write)
-                       .sortWithinPartitions(*keys))
-            # merge_keep_latest refreshes skipping sidecars once, after
-            # the strategy returns — skip the inner overwrite's hook
-            catalog.overwrite(deduped, table, partition_by=[TIME_BUCKET],
-                              refresh_skipping=False)
-            return
-        months = [r[0] for r in incoming.select(TIME_BUCKET).distinct().collect()]
-        existing = catalog.read(table).filter(F.col(TIME_BUCKET).isin(months))
-        merged = keep_latest(
-            existing.unionByName(incoming, allowMissingColumns=True), keys, order_by,
-        ).drop(*drop_before_write)
-        # cluster rows by the dedup keys inside each file: parquet
-        # row-group min/max stats then skip for key-selective reads
-        merged = merged.sortWithinPartitions(*keys)
-        # Materialize before writing: the write target is also the read
-        # source; breaking lineage avoids read-your-own-overwrite. (A real
-        # deployment uses Delta/Iceberg MERGE and skips this.)
-        merged = merged.localCheckpoint(eager=True)
-        (merged.write.mode("overwrite").partitionBy(TIME_BUCKET)
-         .parquet(catalog.path(table)))
-
-
-class DeltaMerge(MergeStrategy):
-    """Delta Lake binding: the same keep-latest upsert as a transactional
-    ``MERGE`` with optimistic concurrency (multi-writer safe). Requires
-    ``delta-spark`` on the cluster (not shipped in this repo's sandbox;
-    the binding is exercised on deployments).
-
-    Semantics mapping: dedup incoming per key first (one winner per key
-    in the batch), then ``MERGE ON keys`` where ``whenMatched`` updates
-    only if the incoming row wins ``order_by`` against the stored row —
-    for an all-descending ``order_by`` (every pipeline here: newest
-    timemark/file wins, nulls last) that condition is a tuple compare
-    ``struct(src.o1, src.o2, ...) >= struct(tgt.o1, tgt.o2, ...)``.
-    Iceberg's ``MERGE INTO`` binds identically via SQL."""
-
-    def merge(self, catalog: "Catalog", table: str, incoming: DataFrame,
-              keys: Sequence[str], order_by: Sequence[Column], *,
-              time_col: str, drop_before_write: Sequence[str]) -> None:
-        try:
-            from delta.tables import DeltaTable
-        except ImportError as e:  # pragma: no cover - deployment-only path
-            raise NotImplementedError(
-                "DeltaMerge requires delta-spark; use DynamicOverwriteMerge "
-                "in environments without it") from e
-        incoming = incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
-        winners = keep_latest(incoming, keys, order_by).drop(*drop_before_write)
-        if not DeltaTable.isDeltaTable(catalog.spark, catalog.path(table)):
-            (winners.write.format("delta").partitionBy(TIME_BUCKET)
-             .save(catalog.path(table)))
-            return
-        target = DeltaTable.forPath(catalog.spark, catalog.path(table))
-        on = " AND ".join(f"tgt.{k} <=> src.{k}" for k in keys)
-        # order columns that survive drop_before_write (transient
-        # tie-break columns exist only batch-side and can't be compared
-        # against the stored row; the surviving prefix, e.g. timemark,
-        # decides — ties resolve incoming-wins via >=, the reference's
-        # last-loaded-wins). Names must be passed AS names: extracting a
-        # name from a Column expression (str(col) parsing) breaks
-        # silently the day an ordering is an expression, so it is a
-        # TypeError here instead.
-        order_cols = []
-        for c in order_by:
-            if not isinstance(c, str):
-                raise TypeError(
-                    "DeltaMerge requires order_by entries as column NAMES "
-                    "(a bare name means '<name> DESC' — the keep-latest "
-                    "convention); got a Column expression, whose name "
-                    "cannot be extracted reliably for the MERGE condition")
-            if c in winners.columns:
-                order_cols.append(c)
-        newer = ("struct(" + ", ".join(f"src.{c}" for c in order_cols) + ") >= "
-                 "struct(" + ", ".join(f"tgt.{c}" for c in order_cols) + ")"
-                 ) if order_cols else "true"
-        (target.alias("tgt").merge(winners.alias("src"), on)
-         .whenMatchedUpdateAll(condition=newer)
-         .whenNotMatchedInsertAll()
-         .execute())
-
-
 class Catalog:
-    def __init__(self, spark: SparkSession, warehouse: str,
-                 merge_strategy: MergeStrategy | None = None):
+    def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
-        self.merge_strategy = merge_strategy or DynamicOverwriteMerge()
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     def path(self, table: str) -> str:
@@ -184,8 +69,11 @@ class Catalog:
     def refresh_skipping(self, table: str) -> dict[str, int]:
         """Bring the table's skipping sidecars (``{table}__zm`` /
         ``{table}__bloom``, see ``sources/skipping.py``) current with
-        its on-disk files. Every mutation verb calls this by default so
-        index staleness never accumulates silently; it costs nothing
+        its on-disk files. Every mutation verb except
+        :meth:`merge_keep_latest` calls this by default so index
+        staleness never accumulates silently (merged files span their
+        whole ``time_bucket``, so a sidecar on a merged table cannot
+        prune below the partition); it costs nothing
         (two dir checks) for the overwhelming majority of tables that
         never built a skipping index. Reserved-sidecar names (double
         underscore — stats tables, commit ledgers, staging dirs) are
@@ -241,15 +129,17 @@ class Catalog:
                           *, time_col: str = "time",
                           drop_before_write: Sequence[str] = ()) -> None:
         """Upsert ``incoming`` with keep-latest semantics, touching only the
-        time-bucket partitions present in the batch. Delegates to the
-        catalog's :class:`MergeStrategy` (parquet dynamic overwrite by
-        default; :class:`DeltaMerge` on Delta deployments).
+        time-bucket partitions present in the batch: keep-latest dedup of
+        the batch union'd with those partitions, rewritten via dynamic
+        partition overwrite. Cost is proportional to the batch's time
+        window, never the table (the reference's bounded DELETE,
+        ``run/ingestObsTasks.py:390-399``, as partition pruning). Every
+        stored row a batch row can displace must share its time bucket,
+        so ``time_col`` belongs in ``keys``.
 
-        Prefer passing ``order_by`` as column NAMES (a bare name means
-        ``<name> DESC`` — ``operators.dedup.keep_latest``'s convention):
-        names work under every strategy; Column expressions work for
-        parquet merges but are rejected by :class:`DeltaMerge`, which
-        needs the names to build its ``whenMatched`` tuple compare.
+        ``order_by`` entries are Columns or column NAMES (a bare name
+        means ``<name> DESC`` — ``operators.dedup.keep_latest``'s
+        convention).
 
         ``drop_before_write``: transient ordering helper columns present
         only on the incoming side (e.g. source file identity used as a
@@ -257,11 +147,38 @@ class Catalog:
         ``order_by`` on them must tolerate nulls (desc puts nulls last —
         incoming wins ties, i.e. last-loaded-wins, like the reference's
         serial-id tie-break).
+
+        No skipping refresh: merged files span their whole ``time_bucket``
+        (``keep_latest`` hash-shuffles on the keys), so a sidecar on a
+        merged table cannot prune below the partition. A sidecar built
+        earlier goes stale safely (``zonemap.prune_files`` ``path=``).
         """
-        self.merge_strategy.merge(self, table, incoming, keys, order_by,
-                                  time_col=time_col,
-                                  drop_before_write=drop_before_write)
-        self.refresh_skipping(table)
+        incoming = incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
+        if incoming.isEmpty():
+            # degenerate batches (e.g. a header-only harvest file) must
+            # not create/overwrite anything: writing an empty frame to a
+            # fresh table path leaves a parquet dir with no footers that
+            # poisons every later read
+            return
+        if not self.exists(table):
+            deduped = (keep_latest(incoming, keys, order_by).drop(*drop_before_write)
+                       .sortWithinPartitions(*keys))
+            self.overwrite(deduped, table, partition_by=[TIME_BUCKET],
+                           refresh_skipping=False)
+            return
+        months = [r[0] for r in incoming.select(TIME_BUCKET).distinct().collect()]
+        existing = self.read(table).filter(F.col(TIME_BUCKET).isin(months))
+        merged = keep_latest(
+            existing.unionByName(incoming, allowMissingColumns=True), keys, order_by,
+        ).drop(*drop_before_write)
+        # cluster rows by the dedup keys inside each file: parquet
+        # row-group min/max stats then skip for key-selective reads
+        merged = merged.sortWithinPartitions(*keys)
+        # Materialize before writing: the write target is also the read
+        # source; breaking lineage avoids read-your-own-overwrite.
+        merged = merged.localCheckpoint(eager=True)
+        (merged.write.mode("overwrite").partitionBy(TIME_BUCKET)
+         .parquet(self.path(table)))
 
     def update(self, table: str, df: DataFrame) -> None:
         """Full-replace of a small control/ledger table (flag flips)."""

@@ -3,6 +3,8 @@ engine's hardest correctness item (SURVEY section 7 'hard parts')."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -44,26 +46,52 @@ def test_keep_latest_matches_pandas(data):
     assert got == exp
 
 
+#: event times across three months, two of them a minute apart over a
+#: month boundary, so a batch touches some stored partitions and not others
+_TIMES = [dt.datetime(2024, 1, 31, 23, 59), dt.datetime(2024, 2, 1, 0, 0),
+          dt.datetime(2024, 2, 15, 12, 0), dt.datetime(2024, 3, 1, 6, 0)]
+
+timed_rows = st.lists(
+    st.tuples(st.integers(min_value=0, max_value=3),          # key
+              st.integers(min_value=0, max_value=len(_TIMES) - 1),  # time
+              st.integers(min_value=0, max_value=5),          # version
+              st.floats(allow_nan=False, allow_infinity=False, width=32)),
+    min_size=1, max_size=40,
+)
+
+
 @settings(max_examples=8, deadline=None)
-@given(rows, rows)
+@given(timed_rows, timed_rows)
 def test_merge_equals_one_shot(existing, incoming):
-    """Merging batch B into a table built from batch A equals deduping
-    A ∪ B in one pass — the incremental path loses nothing."""
+    """Merging batch B into a table built from batch A with
+    ``Catalog.merge_keep_latest`` (partition-bounded read → keep-latest →
+    dynamic overwrite) equals deduping A ∪ B in one pass — the
+    incremental path loses nothing."""
+    import tempfile
+
     from pyspark.sql import SparkSession
 
-    from apsviz_timeseriesdb_ingest_spark.operators.dedup import merge_keep_latest
+    from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
 
     spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-    schema = "key int, version int, id long, value double"
+    schema = "key int, time timestamp_ntz, version int, id long, value double"
+    keys = ["key", "time"]
     order = [F.col("version").desc(), F.col("id").desc()]
-    # disjoint id parity across batches keeps the total order tie-free
-    existing = [(k, v, i * 2, val) for k, v, i, val in existing]
-    incoming = [(k, v, i * 2 + 1, val) for k, v, i, val in incoming]
-    a = keep_latest(spark.createDataFrame(existing, schema), ["key"], order)
-    b = spark.createDataFrame(incoming, schema)
-    merged = sorted(map(tuple, merge_keep_latest(a, b, ["key"], order).collect()))
+    # unique ids, disjoint in parity across batches: the order is total
+    existing = [(k, _TIMES[t], v, n * 2, val)
+                for n, (k, t, v, val) in enumerate(existing)]
+    incoming = [(k, _TIMES[t], v, n * 2 + 1, val)
+                for n, (k, t, v, val) in enumerate(incoming)]
+    with tempfile.TemporaryDirectory() as wh:
+        catalog = Catalog(spark, wh)
+        for batch in (existing, incoming):
+            catalog.merge_keep_latest(
+                "facts", spark.createDataFrame(batch, schema), keys, order)
+        merged = sorted(map(tuple, catalog.read("facts")
+                            .select("key", "time", "version", "id", "value")
+                            .collect()))
     oneshot = sorted(map(tuple, keep_latest(
-        spark.createDataFrame(existing + incoming, schema), ["key"], order).collect()))
+        spark.createDataFrame(existing + incoming, schema), keys, order).collect()))
     assert merged == oneshot
 
 

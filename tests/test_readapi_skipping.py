@@ -1,13 +1,12 @@
-"""Zone-map file skipping wired into the dashboard read API (r6 verdict
-task 7): the X1/X3/X4 pivots' fact scans prune their FILE list through
-the ``{table}__zm`` sidecar before any task is scheduled. Contract:
-results byte-identical with and without the sidecar (skipping is I/O
-only), and the skipping read schedules strictly fewer input files on a
-multi-month table."""
+"""The dashboard read API skips fact files by ``time_bucket`` partition
+alone: the X1/X2 pivots over a 6-month table schedule only the files of
+the months their [start, end] spans, and return the rows a plain
+filtered read returns."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 from pyspark.sql import functions as F
 
@@ -16,10 +15,6 @@ from apsviz_timeseriesdb_ingest_spark.plans.read_api import (
     get_obs_timeseries_station_data_allparms,
 )
 from apsviz_timeseriesdb_ingest_spark.sources.catalog import Catalog
-from apsviz_timeseriesdb_ingest_spark.sources.skipping import (
-    build_skipping,
-    zm_table,
-)
 from apsviz_timeseriesdb_ingest_spark.sources.zonemap import (
     list_parquet_files,
 )
@@ -58,67 +53,48 @@ def _env(spark, tmp_path):
     return catalog
 
 
-def test_pivot_results_identical_and_fewer_files(spark, tmp_path):
+def _fact_files(df) -> set[str]:
+    return {os.path.basename(f) for f in df.inputFiles() if "/gauge_data/" in f}
+
+
+def test_pivot_reads_only_the_window_partition(spark, tmp_path):
     catalog = _env(spark, tmp_path)
-    args = (catalog, "ST_A", "2024-02-03 00:00:00", "2024-02-20 00:00:00")
+    lo, hi = "2024-02-03 00:00:00", "2024-02-20 00:00:00"
 
-    plain = get_obs_timeseries_station_data(*args)
-    plain_rows = sorted(map(tuple, plain.collect()))
-    plain_files = len(plain.inputFiles())
+    got = get_obs_timeseries_station_data(catalog, "ST_A", lo, hi)
+    got_rows = sorted((r.time_stamp, r.tidal_gauge_water_level)
+                      for r in got.collect())
+    plain = (catalog.read("gauge_data")
+             .filter(F.col("time").between(F.lit(lo).cast("timestamp_ntz"),
+                                           F.lit(hi).cast("timestamp_ntz")))
+             .select(F.date_format("time", "yyyy-MM-dd HH:mm:ss"),
+                     "water_level"))
+    assert got_rows == sorted(map(tuple, plain.collect()))
+    assert got_rows  # the window actually matched data
 
-    build_skipping(catalog, "gauge_data", range_cols=["time"])
-    pruned = get_obs_timeseries_station_data(*args)
-    assert sorted(map(tuple, pruned.collect())) == plain_rows
-    pruned_files = len(pruned.inputFiles())
-    total = len(list_parquet_files(catalog.path("gauge_data")))
-    # partition pruning alone reads all of February (4 files); the zone
-    # map still bounds the list to a subset of the table
-    assert pruned_files < total
-    assert pruned_files <= plain_files
-    assert plain_rows  # the window actually matched data
+    feb = {os.path.basename(f) for f in list_parquet_files(
+        os.path.join(catalog.path("gauge_data"), "time_bucket=2024-02"))}
+    assert len(feb) == 4
+    assert len(list_parquet_files(catalog.path("gauge_data"))) == 24
+    assert _fact_files(got) == feb
 
-    # allparms shares the wiring
+    # allparms shares the fact scan
     ap = get_obs_timeseries_station_data_allparms(
-        catalog, "ST_A", "2024-02-03 00:00:00", "2024-02-20 00:00:00",
-        "nowcast.src")
-    assert ap.count() == len(plain_rows)
+        catalog, "ST_A", lo, hi, "nowcast.src")
+    assert sorted((r.time_stamp, r.tidal_gauge_water_level)
+                  for r in ap.collect()) == got_rows
+    assert _fact_files(ap) == feb
 
 
-def test_unparseable_bound_degrades_to_plain_read(spark, tmp_path):
+def test_loose_date_bounds_prune_to_the_right_partition(spark, tmp_path):
     catalog = _env(spark, tmp_path)
-    build_skipping(catalog, "gauge_data", range_cols=["time"])
-    # '2024-2-3' is valid for the Spark cast (reference Postgres accepts
-    # it) but not for the driver-side ISO parse: skipping must bow out,
-    # results must still be correct
+    # '2024-2-3' is valid for the Spark cast (the reference's Postgres
+    # accepts it): the bucket bound must come from the parsed timestamp,
+    # not from slicing the string, or February matches no partition
     loose = get_obs_timeseries_station_data(
         catalog, "ST_A", "2024-2-3", "2024-2-20")
     strict = get_obs_timeseries_station_data(
         catalog, "ST_A", "2024-02-03 00:00:00", "2024-02-20 00:00:00")
-    assert sorted(map(tuple, loose.collect())) == \
-        sorted(map(tuple, strict.collect()))
-
-
-def test_stale_sidecar_keeps_new_files(spark, tmp_path):
-    """Files appended after the stats build are KEPT unconditionally —
-    a stale zone map reads more, never less."""
-    catalog = _env(spark, tmp_path)
-    build_skipping(catalog, "gauge_data", range_cols=["time"])
-    late = spark.createDataFrame(
-        [(10, dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 10, 5),
-          99.0, None, None, None, None, None)],
-        "source_id long, timemark timestamp_ntz, time timestamp_ntz, "
-        "water_level double, wave_height double, wind_speed double, "
-        "air_pressure double, stream_elevation double, flow_volume double")
-    # bypass the auto-refresh hook to simulate staleness
-    (late.withColumn("time_bucket", F.date_format("time", "yyyy-MM"))
-     .coalesce(1).write.mode("append").partitionBy("time_bucket")
-     .parquet(catalog.path("gauge_data")))
-    got = get_obs_timeseries_station_data(
-        catalog, "ST_A", "2024-02-10 00:00:00", "2024-02-10 12:00:00")
-    vals = {r["tidal_gauge_water_level"] for r in got.collect()}
-    assert 99.0 in vals
-    # sanity: the sidecar is indeed stale (fewer stats rows than files)
-    stats_files = {r.file for r in catalog.read(zm_table("gauge_data"))
-                   .select("file").collect()}
-    assert len(stats_files) < len(
-        list_parquet_files(catalog.path("gauge_data")))
+    rows = sorted(map(tuple, loose.collect()))
+    assert rows and rows == sorted(map(tuple, strict.collect()))
+    assert _fact_files(loose) == _fact_files(strict)

@@ -1,7 +1,8 @@
-"""Skipping-index maintenance hooks: Catalog mutation verbs keep the
-``__zm``/``__bloom`` sidecars exactly current (r6; previously staleness
-was SAFE but silent — reads just skipped less until someone re-ran
-``build_skipping(incremental=True)`` by hand).
+"""Skipping-index maintenance hooks: Catalog mutation verbs other than
+``merge_keep_latest`` keep the ``__zm``/``__bloom`` sidecars exactly
+current (r6; previously staleness was SAFE but silent — reads just
+skipped less until someone re-ran ``build_skipping(incremental=True)``
+by hand).
 
 Contract order mirrors the zonemap/bloom tests: result equality first,
 then that the sidecars actually track the on-disk file set, then that
@@ -118,23 +119,34 @@ def test_opt_out_leaves_stats_stale_but_reads_correct(spark, catalog):
     assert read_between(catalog, "t", "k", 100, 119).count() == 20
 
 
-def test_merge_keep_latest_refreshes(spark, catalog):
+def test_merge_keep_latest_leaves_sidecar_stale_reads_correct(spark, catalog):
+    """The merge does not refresh sidecars (merged files span their whole
+    time_bucket, so stats cannot prune below the partition). A sidecar
+    built before a merge goes stale, and reads stay correct: files the
+    merge wrote are kept, stats rows of the files it replaced are
+    dropped."""
     import datetime as dt
 
-    rows = [(i, dt.datetime(2024, 1 + i % 2, 1), float(i))
+    schema = "id long, time timestamp_ntz, ver long, v double"
+    rows = [(i, dt.datetime(2024, 1 + i % 2, 1 + i), 1, float(i))
             for i in range(20)]
-    df = spark.createDataFrame(
-        rows, "id long, time timestamp_ntz, v double")
-    catalog.merge_keep_latest("facts", df, ["id"], ["time"])
+    catalog.merge_keep_latest("facts", spark.createDataFrame(rows, schema),
+                              ["id", "time"], ["ver"])
     build_skipping(catalog, "facts", range_cols=["id"])
+    before = _covered(catalog, zm_table("facts"))
+    assert before == set(list_parquet_files(catalog.path("facts")))
     newer = spark.createDataFrame(
-        [(3, dt.datetime(2024, 3, 1), 99.0),
-         (100, dt.datetime(2024, 3, 1), 1.0)],
-        "id long, time timestamp_ntz, v double")
-    catalog.merge_keep_latest("facts", newer, ["id"], ["time"])
-    assert _covered(catalog, zm_table("facts")) == \
-        set(list_parquet_files(catalog.path("facts")))
+        [(3, dt.datetime(2024, 2, 4), 2, 99.0),       # rewrites February
+         (100, dt.datetime(2024, 3, 1), 1, 1.0)],     # opens March
+        schema)
+    catalog.merge_keep_latest("facts", newer, ["id", "time"], ["ver"])
+    on_disk = set(list_parquet_files(catalog.path("facts")))
+    assert _covered(catalog, zm_table("facts")) == before  # stale
+    assert before - on_disk and on_disk - before
+    assert [r.v for r in read_between(catalog, "facts", "id", 3, 3)
+            .collect()] == [99.0]
     assert read_between(catalog, "facts", "id", 100, 100).count() == 1
+    assert read_between(catalog, "facts", "id", 0, 100).count() == 21
 
 
 def test_empty_table_build_then_append_refreshes(spark, catalog):
