@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.predicates import interval_overlaps
 from ..operators.dedup import keep_latest
-from ..schemas import APSVIZ_STATION, RETAIN_OBS_STATION
+from ..schemas import APSVIZ_STATION
 from ..sources.catalog import Catalog
 
 #: categories never published as obs stations
@@ -111,7 +111,7 @@ def publish_apsviz_stations(spark: SparkSession, catalog: Catalog, *,
     if location_type == "tidal":
         wanted_types |= set(EVERY_LOCATION_TYPE) - set(all_location_types)
 
-    retain = catalog.read("retain_obs_station", RETAIN_OBS_STATION)
+    retain = catalog.read("retain_obs_station")
     obs = (
         retain.filter(F.col("location_type").isin(list(wanted_types)))
         .filter(interval_overlaps(

@@ -13,10 +13,14 @@ Per run directory ``<harvest_dir>/<model_run_id>/`` containing
 4. unseen (filename_prefix, source_instance) sources auto-registered into
    source_model_meta + model_source (J8 + M1,
    ``run/runModelIngest.py:243-261``) — an idempotent dimension upsert
-5. data merged into model_data keyed (source_id, timemark, time): multiple
-   runs coexist per timemark; reruns of the same run keep the latest load
+   behind one probe of source_model_meta per run
+5. every file of the run parsed in one read and merged into model_data
+   keyed (source_id, timemark, time): multiple runs coexist per timemark;
+   reruns of the same run keep the latest load
    (``run/ingestModelTasks.py:102-114,375-383``)
-6. harvest ledger rows appended + flipped (M2)
+6. harvest ledger rows appended + flipped (M2), each file's [min, max]
+   TIME and the run's row count taken from the batch the merge
+   materialised
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ from glob import glob
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import HARVEST_MODEL_FILE_META, MODEL_DATA, SOURCE_MODEL_META
+from ..schemas import HARVEST_MODEL_FILE_META, SOURCE_MODEL_META
 from ..sources.catalog import Catalog
 from ..sources.harvest_csv import read_harvest_csv
 from .bootstrap import source_key
@@ -36,6 +40,10 @@ from .dashboard_meta import get_adcirc_run_property_variables
 
 LEDGER = "harvest_model_file_meta"
 FACT = "model_data"
+
+#: the source_model_meta / model_source columns that identify a source
+SOURCE_COLS = ("data_source", "source_name", "source_archive", "source_instance",
+               "forcing_metclass")
 
 #: station-type suffix → (source_variable, location_type, units)
 #: (run/runModelIngest.py:215-238)
@@ -95,42 +103,42 @@ class ModelIngest:
         self.ui_data_url = ui_data_url
 
     def _register_source(self, src: dict) -> None:
-        """Idempotent source auto-registration (J8+M1): add source meta and
-        one model_source row per station of the matching location_type."""
-        meta = self.catalog.read("source_model_meta", SOURCE_MODEL_META)
-        if self.catalog.exists("source_model_meta"):
-            seen = meta.filter(
-                (F.col("filename_prefix") == src["filename_prefix"])
-                & (F.col("source_instance") == src["source_instance"])).limit(1).count()
-            if seen:
-                return
-        row = self.spark.createDataFrame(
-            [[src[k] for k in ("data_source", "source_name", "source_archive",
-                               "source_variable", "source_instance", "forcing_metclass",
-                               "filename_prefix", "location_type", "units")]],
-            "data_source string, source_name string, source_archive string, "
-            "source_variable string, source_instance string, forcing_metclass string, "
-            "filename_prefix string, location_type string, units string")
-        self.catalog.append(row, "source_model_meta")
+        """Idempotent source auto-registration (J8+M1) of one source."""
+        self._register_sources([src])
 
-        stations = (self.catalog.read("gauge_station")
-                    .filter(F.col("location_type") == src["location_type"]))
-        model_source = stations.select(
-            source_key(F.col("station_name"), F.lit(src["data_source"]),
-                       F.lit(src["source_name"]), F.lit(src["source_archive"]))
+    def _register_sources(self, srcs: list[dict]) -> None:
+        """Idempotent source auto-registration (J8+M1): add source meta and
+        one model_source row per station of the matching location_type for
+        every source of ``srcs`` not registered yet. One probe of
+        source_model_meta, bounded to these sources' keys, finds the
+        registered ones; a run whose sources are all known writes nothing."""
+        unseen = {(s["filename_prefix"], s["source_instance"]): s for s in srcs}
+        if self.catalog.exists("source_model_meta"):
+            probe = self.catalog.read("source_model_meta").filter(
+                F.col("filename_prefix").isin([k[0] for k in unseen])
+                & F.col("source_instance").isin([k[1] for k in unseen]))
+            for r in probe.select("filename_prefix", "source_instance").collect():
+                unseen.pop((r.filename_prefix, r.source_instance), None)
+        if not unseen:
+            return
+        new = self.spark.createDataFrame(
+            [[s[f.name] for f in SOURCE_MODEL_META.fields] for s in unseen.values()],
+            SOURCE_MODEL_META)
+        self.catalog.append(new, "source_model_meta")
+
+        stations = self.catalog.read("gauge_station").select(
+            "station_id", "station_name", "location_type")
+        model_source = stations.join(F.broadcast(new), "location_type").select(
+            source_key(F.col("station_name"), F.col("data_source"),
+                       F.col("source_name"), F.col("source_archive"))
             .alias("source_id"),
-            "station_id",
-            F.lit(src["data_source"]).alias("data_source"),
-            F.lit(src["source_name"]).alias("source_name"),
-            F.lit(src["source_archive"]).alias("source_archive"),
-            F.lit(src["source_instance"]).alias("source_instance"),
-            F.lit(src["forcing_metclass"]).alias("forcing_metclass"),
-            F.lit(src["units"]).alias("units"),
+            "station_id", *SOURCE_COLS, "units",
         )
         self.catalog.append(model_source, "model_source")
 
     def ingest_run(self, model_run_id: str, config_items: DataFrame) -> dict:
-        """Ingest one model run directory end-to-end."""
+        """Ingest one model run directory end-to-end: every file of the run
+        in one read, one merge, one ledger append."""
         props = get_adcirc_run_property_variables(config_items, model_run_id)
         timemark = derive_timemark(props["time.currentdate"], props["time.currentcycle"])
         run_dir = os.path.join(self.harvest_dir, model_run_id)
@@ -142,69 +150,70 @@ class ModelIngest:
                 if station_type not in STATION_TYPES:
                     continue
                 src = derive_source(props, kind, station_type)
-                files.append((path, kind, src))
+                files.append((os.path.basename(path).replace(":", "_"), path, src))
         if not files:
             return {"files": 0, "rows": 0, "station_files": 0}
 
-        for _, _, src in files:
-            self._register_source(src)
+        self._register_sources([src for _, _, src in files])
 
+        # file → source lookup, broadcast into the one read of the run
+        file_src = self.spark.createDataFrame(
+            [[key, *(src[c] for c in SOURCE_COLS)] for key, _, src in files],
+            "file_key string, " + ", ".join(f"{c} string" for c in SOURCE_COLS))
+        # station_name → source_id for this run's sources only
+        sources = (self.catalog.read("model_source")
+                   .join(F.broadcast(file_src.drop("file_key")), list(SOURCE_COLS),
+                         "left_semi")
+                   .join(self.catalog.read("gauge_station")
+                         .select("station_id", "station_name"), "station_id")
+                   .select("station_name", "source_id", *SOURCE_COLS))
         processing = dt.datetime.now().replace(microsecond=0)
-        batch = None
-        ledger_rows = []
-        windows = {}
-        for path, kind, src in files:
-            name = os.path.basename(path)
-            raw = read_harvest_csv(self.spark, [path], "water_level")
-            w = raw.agg(F.min("time").alias("lo"), F.max("time").alias("hi")).first()
-            windows[name] = (w["lo"], w["hi"])
-            df = (
-                raw
-                .withColumn("timemark", F.lit(timemark).cast("timestamp_ntz"))
-                .join(F.broadcast(
-                    self.catalog.read("model_source")
-                    .filter((F.col("data_source") == src["data_source"])
-                            & (F.col("source_name") == src["source_name"])
-                            & (F.col("source_archive") == src["source_archive"])
-                            & (F.col("source_instance") == src["source_instance"])
-                            & (F.col("forcing_metclass") == src["forcing_metclass"]))
-                    .join(self.catalog.read("gauge_station")
-                          .select("station_id", "station_name"), "station_id")
-                    .select("station_name", "source_id")), "station_name")
-                .select("source_id", "timemark", "time",
-                        "water_level", F.lit(None).cast("double").alias("wave_height"),
-                        F.lit(processing).cast("timestamp_ntz").alias("__proc_dt"))
-            )
-            batch = df if batch is None else batch.unionByName(df)
-            ledger_rows.append({
-                "dir_path": run_dir, "file_name": name, "model_run_id": model_run_id,
-                "processing_datetime": processing, "data_date_time": timemark,
-                "data_begin_time": windows[name][0], "data_end_time": windows[name][1],
-                "data_source": src["data_source"], "source_name": src["source_name"],
-                "source_archive": src["source_archive"],
-                "source_instance": src["source_instance"],
-                "forcing_metclass": src["forcing_metclass"],
-                "advisory": props["advisory"], "timemark": timemark,
-                "ingested": True, "overlap_past_file_date_time": False,
-            })
-
-        batch = batch.filter(F.col("time").isNotNull())
-        n_rows = batch.count()
+        # left join: rows of stations without a model_source row keep a
+        # null source_id, which the merge skips but the file's TIME window
+        # still covers
+        batch = (
+            read_harvest_csv(self.spark, [path for _, path, _ in files], "water_level")
+            .join(F.broadcast(file_src), "file_key")
+            .join(F.broadcast(sources), ["station_name", *SOURCE_COLS], "left")
+            .select("source_id", F.lit(timemark).cast("timestamp_ntz").alias("timemark"),
+                    "time", "water_level",
+                    F.lit(None).cast("double").alias("wave_height"),
+                    F.lit(processing).cast("timestamp_ntz").alias("__proc_dt"),
+                    F.col("file_key").alias("__file_key"))
+        )
         # rerun dedup (run/ingestModelTasks.py:102-114): key includes
         # timemark so runs coexist; latest processing wins on rerun
-        self.catalog.merge_keep_latest(
+        batch = self.catalog.merge_keep_latest(
             FACT, batch, keys=["source_id", "timemark", "time"],
             order_by=["__proc_dt"],
-            time_col="time", drop_before_write=["__proc_dt"],
+            time_col="time", drop_before_write=["__proc_dt", "__file_key"],
         )
+        merged = F.col("source_id").isNotNull() & F.col("time").isNotNull()
+        stats = {r["__file_key"]: r for r in batch.groupBy("__file_key").agg(
+            F.min("time").alias("lo"), F.max("time").alias("hi"),
+            F.count_if(merged).alias("rows")).collect()}
 
+        ledger_rows = []
+        for key, path, src in files:
+            st = stats.get(key)
+            ledger_rows.append({
+                "dir_path": run_dir, "file_name": os.path.basename(path),
+                "model_run_id": model_run_id,
+                "processing_datetime": processing, "data_date_time": timemark,
+                "data_begin_time": st["lo"] if st else None,
+                "data_end_time": st["hi"] if st else None,
+                "advisory": props["advisory"], "timemark": timemark,
+                "ingested": True, "overlap_past_file_date_time": False,
+                **{c: src[c] for c in SOURCE_COLS},
+            })
         entries = self.spark.createDataFrame(
             [[r[f.name] for f in HARVEST_MODEL_FILE_META.fields] for r in ledger_rows],
             HARVEST_MODEL_FILE_META)
         self.catalog.append(entries, LEDGER)
 
         published = self.publish_stations(model_run_id, props, timemark)
-        return {"files": len(files), "rows": n_rows, "station_files": published}
+        return {"files": len(files), "rows": sum(r["rows"] for r in stats.values()),
+                "station_files": published}
 
     def publish_stations(self, model_run_id: str, props: dict,
                          timemark: dt.datetime) -> int:
@@ -234,8 +243,7 @@ class ModelIngest:
             probe = read_equals(self.catalog, "apsviz_station_file_meta",
                                 "model_run_id", [model_run_id])
         else:
-            probe = self.catalog.read("apsviz_station_file_meta",
-                                      APSVIZ_STATION_FILE_META).filter(
+            probe = self.catalog.read("apsviz_station_file_meta").filter(
                 F.col("model_run_id") == model_run_id)
         seen = {r.file_name for r in probe.select("file_name").collect()}
 
@@ -292,7 +300,7 @@ class ModelIngest:
         run_dir = os.path.join(self.harvest_dir, model_run_id)
         if not os.path.isdir(run_dir):
             return False
-        ledger = self.catalog.read(LEDGER, HARVEST_MODEL_FILE_META)
+        ledger = self.catalog.read(LEDGER)
         pending = (ledger.filter((F.col("dir_path") == run_dir)
                                  & ~F.col("ingested"))
                    .limit(1).count())
@@ -302,4 +310,4 @@ class ModelIngest:
         return True
 
     def model_data(self) -> DataFrame:
-        return self.catalog.read(FACT, MODEL_DATA)
+        return self.catalog.read(FACT)

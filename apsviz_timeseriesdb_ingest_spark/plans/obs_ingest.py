@@ -3,15 +3,18 @@ as one Spark lineage (SURVEY section 3.1).
 
 Reference stages (per-source subprocesses + intermediate CSVs) collapse to:
 
-    discover()    -- glob harvest dir, anti-join the ledger (J4), compute
-                     per-file timemark (F1) + min/max TIME (A1) in ONE
-                     distributed read, append ledger rows ingested=False
-    ingest_new()  -- read all pending files (one job per measure variable),
-                     enrich with source_id via broadcast dim join (J1/J2),
-                     widen to the sparse 6-measure layout (S6),
-                     merge into gauge_data with keep-latest dedup bounded
-                     to each batch's time window (J7/M3),
-                     flip ledger ingested flags (M2)
+    discover()    -- glob harvest dir, anti-join the ledger (J4), derive
+                     per-file timemark (F1) from the file name, append
+                     ledger rows ingested=False with null TIME stats; no
+                     CSV is read here
+    ingest_new()  -- read all pending files (one scan per measure variable,
+                     the only parse a file gets), enrich with source_id via
+                     broadcast dim join (J1/J2), widen to the sparse
+                     6-measure layout (S6), merge into gauge_data with
+                     keep-latest dedup bounded to each batch's time window
+                     (J7/M3), then one ledger rewrite that flips the
+                     ingested flags (M2) and fills each file's min/max
+                     TIME (A1) from the batch the merge materialised
 
 Keep-latest ordering: the reference keeps the highest serial ``obs_id``
 per (source_id, time) — i.e. last-loaded wins, and files are loaded in
@@ -34,7 +37,6 @@ from pyspark.sql import functions as F
 
 from ..operators.ledger import new_files_anti_join
 from ..schemas import (
-    GAUGE_DATA,
     HARVEST_OBS_FILE_META,
     OBS_MEASURES,
     RETAIN_OBS_STATION,
@@ -79,9 +81,11 @@ class ObsIngest:
 
     def discover(self) -> int:
         """Find new harvest files for every configured source; append them
-        to the ledger with ingested=False. Returns number discovered."""
+        to the ledger with ingested=False and null TIME stats (the stats
+        are filled by :meth:`ingest_new`, which parses the file anyway).
+        Returns number discovered."""
         source_meta = self.catalog.read("source_obs_meta").collect()
-        ledger = self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
+        ledger = self.catalog.read(LEDGER)
 
         candidates = []
         for m in source_meta:
@@ -107,42 +111,33 @@ class ObsIngest:
             "timemark timestamp_ntz, data_source string, source_name string, "
             "source_archive string, source_variable string, location_type string",
         )
-        new = new_files_anti_join(cand, ledger).cache()
+        new = new_files_anti_join(cand, ledger)
         new_rows = new.collect()
         if not new_rows:
-            new.unpersist()
             return 0
 
-        # per-file [min,max] TIME in one distributed read per variable (A1)
-        stats = None
-        for variable in {r.source_variable for r in new_rows}:
-            paths = [self._readable_path(r.dir_path, r.file_name) for r in new_rows
-                     if r.source_variable == variable]
-            s = (read_harvest_csv(self.spark, paths, variable)
-                 .groupBy("file_key")
-                 .agg(F.min("time").alias("data_begin_time"),
-                      F.max("time").alias("data_end_time")))
-            stats = s if stats is None else stats.unionByName(s)
-
+        no_time = F.lit(None).cast("timestamp_ntz")
         entries = (
-            new.withColumn("file_key", F.translate("file_name", ":", "_"))
-            .join(stats, "file_key", "left")
+            self.spark.createDataFrame(new_rows, new.schema)
             .withColumn("processing_datetime", F.current_timestamp().cast("timestamp_ntz"))
+            .withColumn("data_begin_time", no_time)
+            .withColumn("data_end_time", no_time)
             .withColumn("ingested", F.lit(False))
             .withColumn("overlap_past_file_date_time", F.lit(False))
             .select(*[f.name for f in HARVEST_OBS_FILE_META.fields])
         )
         self.catalog.append(entries, LEDGER)
-        new.unpersist()
         return len(new_rows)
 
     # -- stages 2+3: enrich + merge ---------------------------------------
 
     def ingest_new(self) -> int:
-        """Ingest every pending ledger file into the fact table. Returns
+        """Ingest every pending ledger file into the fact table, then flip
+        its ledger row and fill its [min, max] TIME (A1) over every parsed
+        row, stations the source lookup does not know included. Returns
         number of files ingested."""
-        ledger = self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
-        pending = ledger.filter(~F.col("ingested")).orderBy("data_date_time").collect()
+        ledger = self.catalog.read(LEDGER)
+        pending = ledger.filter(~F.col("ingested")).collect()
         if not pending:
             return 0
 
@@ -168,13 +163,16 @@ class ObsIngest:
 
         batch = None
         for variable in sorted({r.source_variable for r in pending}):
-            paths = [self._readable_path(r.dir_path, r.file_name) for r in pending
-                     if r.source_variable == variable]
+            paths = sorted(self._readable_path(r.dir_path, r.file_name) for r in pending
+                           if r.source_variable == variable)
+            # left join: rows of unknown stations keep a null source_id,
+            # which the merge skips but the per-file TIME stats still see
             df = (
                 read_harvest_csv(self.spark, paths, variable)
                 .join(F.broadcast(pending_meta), "file_key")
                 .join(F.broadcast(src_lookup),
-                      ["station_name", "data_source", "source_name", "source_archive"])
+                      ["station_name", "data_source", "source_name", "source_archive"],
+                      "left")
                 .select(
                     "source_id", "timemark", "time",
                     *[(F.col(variable) if m == variable else F.lit(None).cast("double"))
@@ -185,8 +183,7 @@ class ObsIngest:
             )
             batch = df if batch is None else batch.unionByName(df)
 
-        batch = batch.filter(F.col("time").isNotNull())
-        self.catalog.merge_keep_latest(
+        batch = self.catalog.merge_keep_latest(
             FACT, batch,
             keys=["source_id", "time"],
             order_by=["timemark", "__file_dt", "__file_key"],
@@ -194,10 +191,18 @@ class ObsIngest:
             drop_before_write=["__file_dt", "__file_key"],
         )
 
-        done = {r.file_name for r in pending}
-        updated = ledger.withColumn(
-            "ingested",
-            F.when(F.col("file_name").isin(list(done)), F.lit(True)).otherwise(F.col("ingested")),
+        stats = batch.groupBy("__file_key").agg(F.min("time").alias("__begin"),
+                                                F.max("time").alias("__end"))
+        done = F.col("file_name").isin([r.file_name for r in pending])
+        updated = (
+            ledger.withColumn("__file_key", F.translate("file_name", ":", "_"))
+            .join(F.broadcast(stats), "__file_key", "left")
+            .withColumn("data_begin_time",
+                        F.when(done, F.col("__begin")).otherwise(F.col("data_begin_time")))
+            .withColumn("data_end_time",
+                        F.when(done, F.col("__end")).otherwise(F.col("data_end_time")))
+            .withColumn("ingested", done | F.col("ingested"))
+            .select(*[f.name for f in HARVEST_OBS_FILE_META.fields])
         )
         self.catalog.update(LEDGER, updated)
         return len(pending)
@@ -212,7 +217,7 @@ class ObsIngest:
         (``run/createRetainObsStationFileMeta.py:110-135``), and ledger
         them. Returns number of meta files processed.
 
-        Batched like :meth:`discover`: ONE distributed read computes every
+        Batched across files: ONE distributed read computes every
         paired data file's TIME window (columns are positional
         ``station, TIME`` across all variables, so a single declared
         schema covers them) and ONE read collects every meta file's
@@ -223,8 +228,7 @@ class ObsIngest:
         from pyspark.sql.types import StringType, StructField, StructType
 
         source_meta = self.catalog.read("source_obs_meta").collect()
-        ledger = self.catalog.read("retain_obs_station_file_meta",
-                                   RETAIN_OBS_STATION_FILE_META)
+        ledger = self.catalog.read("retain_obs_station_file_meta")
 
         candidates = []  # (meta file name, paired data file name, timemark, source cfg)
         for m in source_meta:
@@ -333,12 +337,11 @@ class ObsIngest:
         import shutil
 
         done: list[tuple[str, str]] = []
-        ledger = self.catalog.read(LEDGER, HARVEST_OBS_FILE_META)
+        ledger = self.catalog.read(LEDGER)
         done += [(r.dir_path, r.file_name) for r in
                  ledger.filter(F.col("ingested"))
                  .select("dir_path", "file_name").collect()]
-        meta_ledger = self.catalog.read("retain_obs_station_file_meta",
-                                        RETAIN_OBS_STATION_FILE_META)
+        meta_ledger = self.catalog.read("retain_obs_station_file_meta")
         done += [(r.dir_path, r.file_name) for r in
                  meta_ledger.filter(F.col("ingested"))
                  .select("dir_path", "file_name").collect()]
@@ -366,4 +369,4 @@ class ObsIngest:
                 "station_meta": station_meta}
 
     def gauge_data(self) -> DataFrame:
-        return self.catalog.read(FACT, GAUGE_DATA)
+        return self.catalog.read(FACT)

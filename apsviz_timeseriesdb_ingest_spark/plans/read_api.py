@@ -58,11 +58,9 @@ ALLPARMS_POST = dict(OBS_CATEGORIES) | {
 def obs_view(catalog: Catalog) -> DataFrame:
     """drf_gauge_station_source_data (``run/ingestObsTasks.py:494-521``):
     gauge_data ⋈ gauge_source ⋈ gauge_station, dims broadcast."""
-    from ..schemas import GAUGE_DATA, GAUGE_SOURCE, GAUGE_STATION
-
-    data = catalog.read("gauge_data", GAUGE_DATA)
-    source = catalog.read("gauge_source", GAUGE_SOURCE)
-    station = catalog.read("gauge_station", GAUGE_STATION)
+    data = catalog.read("gauge_data")
+    source = catalog.read("gauge_source")
+    station = catalog.read("gauge_station")
     return (
         data.join(F.broadcast(source), "source_id")
         .join(F.broadcast(station), "station_id")
@@ -71,11 +69,9 @@ def obs_view(catalog: Catalog) -> DataFrame:
 
 def model_view(catalog: Catalog) -> DataFrame:
     """drf_model_station_source_data (``run/ingestModelTasks.py:475-501``)."""
-    from ..schemas import GAUGE_STATION, MODEL_DATA, MODEL_SOURCE
-
-    data = catalog.read("model_data", MODEL_DATA)
-    source = catalog.read("model_source", MODEL_SOURCE)
-    station = catalog.read("gauge_station", GAUGE_STATION)
+    data = catalog.read("model_data")
+    source = catalog.read("model_source")
+    station = catalog.read("gauge_station")
     return (
         data.join(F.broadcast(source), "source_id")
         .join(F.broadcast(station), "station_id")

@@ -152,3 +152,24 @@ RUN_PROPERTY_KEYS = (
     "forcing.metclass", "instancename", "storm", "stormname", "stormnumber",
     "physical_location", "time.currentdate", "time.currentcycle", "workflow_type",
 )
+
+#: apsviz catalog table → declared schema. ``Catalog.read`` reads these
+#: tables with their declared schema (no footer-inference job) and the
+#: catalog's write verbs check every write against it. Partition columns
+#: (``time_bucket`` on the fact tables) are not declared here: they are
+#: discovered from the directories.
+TABLE_SCHEMAS = {
+    "gauge_station": GAUGE_STATION,
+    "gauge_source": GAUGE_SOURCE,
+    "gauge_data": GAUGE_DATA,
+    "source_obs_meta": SOURCE_OBS_META,
+    "harvest_obs_file_meta": HARVEST_OBS_FILE_META,
+    "source_model_meta": SOURCE_MODEL_META,
+    "model_source": MODEL_SOURCE,
+    "model_data": MODEL_DATA,
+    "harvest_model_file_meta": HARVEST_MODEL_FILE_META,
+    "retain_obs_station_file_meta": RETAIN_OBS_STATION_FILE_META,
+    "apsviz_station_file_meta": APSVIZ_STATION_FILE_META,
+    "apsviz_station": APSVIZ_STATION,
+    "retain_obs_station": RETAIN_OBS_STATION,
+}

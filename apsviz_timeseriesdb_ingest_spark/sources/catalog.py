@@ -22,6 +22,13 @@ Every verb but the merge keeps skipping sidecars current
 (``refresh_skipping``). The merge does not: merged files span their whole
 ``time_bucket``, so a sidecar on a merged table cannot prune below the
 partition.
+
+The apsviz tables are registered with their declared schemas
+(``schemas.TABLE_SCHEMAS``). :meth:`Catalog.read` reads a registered table
+with that schema, which costs no footer-inference job, and every write
+verb checks a registered table's columns and types against it before
+writing, so a declared read never silently reads nulls for a column the
+files do not hold.
 """
 
 from __future__ import annotations
@@ -31,9 +38,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..operators.dedup import keep_latest
+from ..schemas import TABLE_SCHEMAS
 
 #: partition column derived from event time for fact tables
 TIME_BUCKET = "time_bucket"
@@ -61,10 +68,48 @@ class Catalog:
     def exists(self, table: str) -> bool:
         return os.path.isdir(self.path(table))
 
-    def read(self, table: str, schema: StructType | None = None) -> DataFrame:
-        if not self.exists(table) and schema is not None:
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(self.path(table))
+    def read(self, table: str) -> DataFrame:
+        """The table as a DataFrame. A registered table
+        (``schemas.TABLE_SCHEMAS``) is read with its declared schema: no
+        Spark job (the footers are not read to infer it), partition
+        columns still discovered from the directories, and a table not
+        yet written reads as an empty frame of that schema. Any other
+        table infers its schema from the parquet footers (one job)."""
+        declared = TABLE_SCHEMAS.get(table)
+        if declared is None:
+            return self.spark.read.parquet(self.path(table))
+        if not self.exists(table):
+            return self.spark.createDataFrame([], declared)
+        return self.spark.read.schema(declared).parquet(self.path(table))
+
+    @staticmethod
+    def _check_declared(table: str, df: DataFrame,
+                        partition_by: Sequence[str] = ()) -> None:
+        """Raise ``ValueError`` if ``df``, written to ``table``, does not
+        hold exactly the declared columns and types of a registered table
+        (partition columns aside; column order and nullability are free).
+        Compares analysed schemas on the driver: no Spark job. Unregistered
+        tables pass."""
+        declared = TABLE_SCHEMAS.get(table)
+        if declared is None:
+            return
+        want = {f.name: f.dataType for f in declared.fields}
+        got = {f.name: f.dataType for f in df.schema.fields
+               if f.name not in partition_by}
+        if got == want:
+            return
+        problems = []
+        missing = sorted(want.keys() - got.keys())
+        if missing:
+            problems.append(f"missing {missing}")
+        extra = sorted(got.keys() - want.keys())
+        if extra:
+            problems.append(f"undeclared {extra}")
+        problems += [f"{c} is {got[c].simpleString()}, declared "
+                     f"{want[c].simpleString()}"
+                     for c in sorted(want.keys() & got.keys()) if got[c] != want[c]]
+        raise ValueError(f"write to '{table}' does not match its declared "
+                         f"schema: {'; '.join(problems)}")
 
     def refresh_skipping(self, table: str) -> dict[str, int]:
         """Bring the table's skipping sidecars (``{table}__zm`` /
@@ -99,6 +144,7 @@ class Catalog:
         if sum(map(bool, (partition_by, cluster_by, zorder_by))) > 1:
             raise ValueError("partition_by, cluster_by, and zorder_by "
                              "are mutually exclusive")
+        self._check_declared(table, df, partition_by)
         if cluster_by:
             from .layout import cluster_write
             cluster_write(df, self.path(table), cluster_by, files=files)
@@ -116,6 +162,7 @@ class Catalog:
     def append(self, df: DataFrame, table: str, *,
                partition_by: Sequence[str] = (),
                refresh_skipping: bool = True) -> None:
+        self._check_declared(table, df, partition_by)
         w = df.write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -127,7 +174,7 @@ class Catalog:
                           keys: Sequence[str],
                           order_by: Sequence[Column | str],
                           *, time_col: str = "time",
-                          drop_before_write: Sequence[str] = ()) -> None:
+                          drop_before_write: Sequence[str] = ()) -> DataFrame:
         """Upsert ``incoming`` with keep-latest semantics, touching only the
         time-bucket partitions present in the batch: keep-latest dedup of
         the batch union'd with those partitions, rewritten via dynamic
@@ -136,6 +183,15 @@ class Catalog:
         ``run/ingestObsTasks.py:390-399``, as partition pruning). Every
         stored row a batch row can displace must share its time bucket,
         so ``time_col`` belongs in ``keys``.
+
+        ``incoming`` is evaluated once: it is materialised up front, and
+        one aggregate over those rows yields both the empty-batch guard
+        and the touched ``time_bucket`` values. Rows with a null in any
+        key column are not merged (a null key identifies no row: an
+        unparseable TIME cell, a station the enrichment join could not
+        resolve). Returns the materialised batch — every incoming row,
+        merged or not, plus ``time_bucket`` — so callers derive row
+        counts and per-file stats without evaluating ``incoming`` again.
 
         ``order_by`` entries are Columns or column NAMES (a bare name
         means ``<name> DESC`` — ``operators.dedup.keep_latest``'s
@@ -153,23 +209,33 @@ class Catalog:
         merged table cannot prune below the partition. A sidecar built
         earlier goes stale safely (``zonemap.prune_files`` ``path=``).
         """
-        incoming = incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
-        if incoming.isEmpty():
-            # degenerate batches (e.g. a header-only harvest file) must
-            # not create/overwrite anything: writing an empty frame to a
+        self._check_declared(table, incoming.drop(*drop_before_write),
+                             [TIME_BUCKET])
+        batch = (incoming.withColumn(TIME_BUCKET, time_bucket(time_col))
+                 .localCheckpoint(eager=True))
+        keyed = F.lit(True)
+        for k in keys:
+            keyed = keyed & F.col(k).isNotNull()
+        stats = batch.agg(
+            F.count_if(keyed).alias("rows"),
+            F.collect_set(F.when(keyed, F.col(TIME_BUCKET))).alias("months"),
+        ).first()
+        if not stats["rows"]:
+            # nothing to merge (a header-only harvest file, or no row with
+            # a full key): write nothing — an empty frame written to a
             # fresh table path leaves a parquet dir with no footers that
             # poisons every later read
-            return
+            return batch
+        rows = batch.filter(keyed)
         if not self.exists(table):
-            deduped = (keep_latest(incoming, keys, order_by).drop(*drop_before_write)
+            deduped = (keep_latest(rows, keys, order_by).drop(*drop_before_write)
                        .sortWithinPartitions(*keys))
             self.overwrite(deduped, table, partition_by=[TIME_BUCKET],
                            refresh_skipping=False)
-            return
-        months = [r[0] for r in incoming.select(TIME_BUCKET).distinct().collect()]
-        existing = self.read(table).filter(F.col(TIME_BUCKET).isin(months))
+            return batch
+        existing = self.read(table).filter(F.col(TIME_BUCKET).isin(stats["months"]))
         merged = keep_latest(
-            existing.unionByName(incoming, allowMissingColumns=True), keys, order_by,
+            existing.unionByName(rows, allowMissingColumns=True), keys, order_by,
         ).drop(*drop_before_write)
         # cluster rows by the dedup keys inside each file: parquet
         # row-group min/max stats then skip for key-selective reads
@@ -179,9 +245,11 @@ class Catalog:
         merged = merged.localCheckpoint(eager=True)
         (merged.write.mode("overwrite").partitionBy(TIME_BUCKET)
          .parquet(self.path(table)))
+        return batch
 
     def update(self, table: str, df: DataFrame) -> None:
         """Full-replace of a small control/ledger table (flag flips)."""
+        self._check_declared(table, df)
         df = df.localCheckpoint(eager=True)
         df.write.mode("overwrite").parquet(self.path(table))
         self.refresh_skipping(table)

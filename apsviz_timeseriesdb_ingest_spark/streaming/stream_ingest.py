@@ -90,7 +90,7 @@ class StreamingObsIngest:
         batch = self._enrich(batch).filter(F.col("time").isNotNull())
         if batch.isEmpty():
             return
-        self.catalog.merge_keep_latest(
+        batch = self.catalog.merge_keep_latest(
             "gauge_data", batch,
             keys=["source_id", "time"],
             order_by=["timemark", "__file_key"],

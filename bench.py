@@ -103,18 +103,37 @@ def main() -> None:
     # record to BENCH_LAST.json, and print a line that is itself a
     # complete, parseable record carrying "queries" UNCONDITIONALLY —
     # if the line outgrows the tail budget, drop the cold map first,
-    # never "queries".
+    # never "queries", and fail loudly if that is still not enough.
     try:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_LAST.json"), "w") as f:
             f.write(json.dumps(record) + "\n")
     except OSError:
         pass
+    print(printed_line(record))
+
+
+#: the benchmark consumer keeps only a ~2000-char tail of stdout
+LINE_BUDGET = 1950
+
+
+def printed_line(record: dict) -> str:
+    """The stdout line for ``record``: everything but ``queries_warm``,
+    minus ``queries_cold`` if that is what it takes to fit
+    :data:`LINE_BUDGET`. A line still over budget would reach the consumer
+    clipped and unparseable, so it is refused: exit non-zero (the full
+    record is in BENCH_LAST.json)."""
     printed = {k: v for k, v in record.items() if k != "queries_warm"}
     compact = dict(separators=(",", ":"))
-    if len(json.dumps(printed, **compact)) > 1950:
+    if len(json.dumps(printed, **compact)) > LINE_BUDGET:
         printed = {k: v for k, v in printed.items() if k != "queries_cold"}
-    print(json.dumps(printed, **compact))
+    line = json.dumps(printed, **compact)
+    if len(line) > LINE_BUDGET:
+        raise SystemExit(
+            f"bench.py: the record line is {len(line)} chars without "
+            f"queries_cold, over the {LINE_BUDGET}-char budget; refusing to "
+            "print a line that would arrive clipped (full record: BENCH_LAST.json)")
+    return line
 
 
 if __name__ == "__main__":

@@ -227,3 +227,71 @@ def test_cleanup_run_dir(env, spark):
     assert pipe.cleanup_run_dir(RUN_ID) is False  # idempotent
     # fact data untouched
     assert pipe.model_data().count() == 5
+
+
+@pytest.fixture(scope="module")
+def unknown_env(spark, tmp_path_factory):
+    """A run whose CSVs also carry a station no model_source row covers
+    (ST_Z is not in gauge_station), at each file's earliest or latest
+    TIME; ingested once into a fresh warehouse."""
+    root = tmp_path_factory.mktemp("modelunknown")
+    _write(root / "stations.csv", [
+        "ST_A,34.1,-77.1,gmt,NOAA/NOS,Alpha,tidal,us,nc,NH,0101A",
+    ])
+    _write(root / "meta.csv", [
+        "data_source,source_name,source_archive,source_variable,filename_prefix,location_type,units",
+        "tidal_gauge,noaa,noaa,water_level,noaa_stationdata_water_level,tidal,m",
+    ])
+    catalog = Catalog(spark, str(root / "warehouse"))
+    bootstrap(spark, catalog, station_csvs=[str(root / "stations.csv")],
+              source_meta_csv=str(root / "meta.csv"))
+    run_dir = root / "harvest" / RUN_ID
+    run_dir.mkdir(parents=True)
+    files = {
+        "FORECAST_NOAASTATIONS.csv": [
+            ("ST_A", "2024-01-01 13:00:00", 0.5), ("ST_A", "2024-01-01 14:00:00", 0.6),
+            ("ST_Z", "2024-01-02 06:00:00", 9.9)],
+        "NOWCAST_NOAASTATIONS.csv": [
+            ("ST_Z", "2024-01-01 06:00:00", 9.9), ("ST_A", "2024-01-01 11:00:00", 0.3),
+            ("ST_A", "2024-01-01 12:00:00", 0.4)],
+    }
+    for name, rows in files.items():
+        _write(run_dir / name, ["STATION,TIME,WATER_LEVEL",
+                                *[f"{s},{t},{v}" for s, t, v in rows]])
+    items = [(4420, "21ab3d_gfs", k, v) for k, v in PROPS.items()]
+    config = spark.createDataFrame(
+        items, "instance_id long, uid string, key string, value string")
+    pipe = ModelIngest(spark, catalog, str(root / "harvest"))
+    out = pipe.ingest_run(RUN_ID, config)
+    return {"catalog": catalog, "pipe": pipe, "config": config, "files": files,
+            "out": out}
+
+
+def test_ledger_windows_cover_every_parsed_row(unknown_env):
+    ledger = {r.file_name: r for r in
+              unknown_env["catalog"].read("harvest_model_file_meta").collect()}
+    assert set(ledger) == set(unknown_env["files"])
+    for name, rows in unknown_env["files"].items():
+        times = sorted(t for _, t, _ in rows)
+        assert str(ledger[name].data_begin_time) == times[0]
+        assert str(ledger[name].data_end_time) == times[-1]
+        assert ledger[name].ingested
+
+
+def test_ingest_run_rows_equal_merged_rows(unknown_env):
+    out = unknown_env["out"]
+    assert out["files"] == 2
+    assert out["rows"] == unknown_env["pipe"].model_data().count() == 4
+
+
+def test_second_run_registers_no_source_rows(unknown_env):
+    catalog = unknown_env["catalog"]
+
+    def source_rows():
+        return (catalog.read("source_model_meta").count(),
+                catalog.read("model_source").count())
+
+    assert source_rows() == (2, 2)  # forecast + nowcast, one tidal station
+    out = unknown_env["pipe"].ingest_run(RUN_ID, unknown_env["config"])
+    assert out["rows"] == 4
+    assert source_rows() == (2, 2)

@@ -379,3 +379,45 @@ def test_malformed_harvest_rows_degrade_gracefully(spark, tmp_path_factory):
                     "2024-01-01 01:00:00": None,
                     "2024-01-01 02:00:00": 3.0,
                     "2024-01-01 03:00:00": 4.0}
+
+
+def test_crashed_pass_pending_row_gets_stats_and_flip(spark, tmp_path_factory):
+    # discover() parses no CSV: it ledgers the file with null TIME stats.
+    # A pass that crashes after discover leaves that pending row; the next
+    # pass merges the file, fills its [min, max] TIME over every parsed row
+    # (a station the lookup does not know included) and flips it in one
+    # ledger rewrite; a rerun after that changes nothing.
+    root = tmp_path_factory.mktemp("obscrash")
+    (root / "harvest").mkdir()
+    _write(str(root / "stations.csv"),
+           ["ST_A,34.1,-77.1,gmt,NOAA/NOS,Alpha,tidal,us,nc,NH,01A"])
+    _write(str(root / "meta.csv"), [SOURCE_META_HEADER, SOURCE_META_ROWS[0]])
+    catalog = Catalog(spark, str(root / "warehouse"))
+    bootstrap(spark, catalog, station_csvs=[str(root / "stations.csv")],
+              source_meta_csv=str(root / "meta.csv"))
+    harvest = str(root / "harvest")
+    _harvest_file(harvest, "noaa_stationdata_water_level", "2024-01-01T06:00:00", [
+        ("ST_Z", "2023-12-31 23:00:00", 7.0),   # unknown station, earliest
+        ("ST_A", "2024-01-01 00:00:00", 1.0),
+        ("ST_A", "2024-01-01 01:00:00", 1.1),
+        ("ST_Z", "2024-01-01 05:00:00", 7.5),   # unknown station, latest
+    ])
+    pipe = ObsIngest(spark, catalog, harvest)
+    assert pipe.discover() == 1  # ... and the pass crashes here
+    row = catalog.read("harvest_obs_file_meta").first()
+    assert not row.ingested
+    assert row.data_begin_time is None and row.data_end_time is None
+
+    out = pipe.run_sequence_ingest()
+    assert out == {"discovered": 0, "ingested": 1, "station_meta": 0}
+    ledger = [r.asDict() for r in catalog.read("harvest_obs_file_meta").collect()]
+    assert len(ledger) == 1 and ledger[0]["ingested"]
+    assert str(ledger[0]["data_begin_time"]) == "2023-12-31 23:00:00"
+    assert str(ledger[0]["data_end_time"]) == "2024-01-01 05:00:00"
+    data = sorted(str(r.time) for r in pipe.gauge_data().collect())
+    assert data == ["2024-01-01 00:00:00", "2024-01-01 01:00:00"]
+
+    assert pipe.run_sequence_ingest() == {"discovered": 0, "ingested": 0,
+                                          "station_meta": 0}
+    assert [r.asDict() for r in catalog.read("harvest_obs_file_meta").collect()] == ledger
+    assert sorted(str(r.time) for r in pipe.gauge_data().collect()) == data

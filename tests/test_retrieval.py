@@ -325,7 +325,7 @@ def test_bm25_index_ledger_gated_append_idempotent(spark, tmp_path):
     ledger_t = "bm25_ingest_ledger"
 
     def ingest(batch):
-        ledger = (catalog.read(ledger_t, batch.select("batch").schema)
+        ledger = (catalog.read(ledger_t)
                   if catalog.exists(ledger_t)
                   else spark.createDataFrame([], "batch string"))
         fresh = new_files_anti_join(batch, ledger, file_col="batch")
